@@ -122,10 +122,13 @@ def connected_components(
     """(node, component) for every node in the undirected pair graph, where
     component = the minimum node id reachable from it.
 
-    The edge list is materialized once (it feeds every round anyway); when
-    it is small (< ``SMALL_GRAPH_EDGES``) the components are solved with one
+    Path choice is one bounded job over the lazy edge list (no persist, no
+    full count): it returns the undirected edges when the graph has ≤
+    ``SMALL_GRAPH_EDGES`` directed edges, and they are solved with one
     driver-side union-find — exact same labels, none of the per-round
-    shuffle barriers.  Distributed path-halving handles the big-graph case.
+    shuffle barriers.  Otherwise no edge reaches the driver: the edge list
+    is persisted (it feeds every round) and distributed path-halving
+    handles the big-graph case.
 
     Min-label propagation **with path halving**: each round every node takes
     the min of its own label, its neighbors' labels, and its label's label
@@ -147,13 +150,12 @@ def connected_components(
     description, AQE explain) take minutes to hours.  localCheckpoint
     replaces the plan with a LogicalRDD leaf, keeping both lineage and plan
     O(1) per round — the same recipe graph.py's pagerank/BFS use (and
-    GraphFrames' production CC).  Trade-offs, both shared with graph.py:
-    superseded rounds' checkpoint blocks are reclaimed by the
-    ContextCleaner as the per-round references drop (labels are O(nodes) —
-    two longs per row — so even max_iter retained copies are small next to
-    the edge list), and localCheckpoint is not fault-tolerant: an executor
-    loss mid-loop fails the job rather than recomputing, the standard
-    price of truncating lineage without a reliable checkpoint dir.
+    GraphFrames' production CC).  Superseded rounds' blocks are freed with
+    ``release()`` as soon as the next round is materialized, not left to
+    the async ContextCleaner (see the loop).  As in graph.py,
+    localCheckpoint is not fault-tolerant: an executor loss mid-loop fails
+    the job rather than recomputing, the standard price of truncating
+    lineage without a reliable checkpoint dir.
     """
     # both directions in ONE pass over pairs (a union of two selects would
     # recompute the upstream pair pipeline — often a full similarity join —
@@ -169,28 +171,33 @@ def connected_components(
         )
         .select("_e._src", "_e._dst")
         .distinct()
-        .persist()
     )
-    n_edges = edges.count()  # materializes the persist; drives the path choice
-    if n_edges <= SMALL_GRAPH_EDGES:
-        try:
-            import pandas as pd
+    # each undirected edge appears once with _src < _dst and once reversed,
+    # so ≤ SMALL_GRAPH_EDGES directed edges ⇔ ≤ half that many rows here.
+    # The aggregate sees at most half + 1 rows and returns them only when
+    # they all fit: a big graph sends the driver one null, never its edges.
+    half = SMALL_GRAPH_EDGES // 2
+    [(small,)] = (
+        edges.filter(F.col("_src") < F.col("_dst"))
+        .limit(half + 1)
+        .agg(F.when(F.count("*") <= half, F.collect_list(F.struct("_src", "_dst"))))
+        .collect()
+    )
+    if small is not None:
+        import pandas as pd
 
-            rows = edges.filter(F.col("_src") < F.col("_dst")).collect()
-            labels_map = _union_find_components([(r._src, r._dst) for r in rows])
-            spark = pairs.sparkSession
-            # pandas → Arrow → LocalTableScan: a true local relation with
-            # known (tiny) stats, so downstream joins broadcast it.  A plain
-            # createDataFrame(list) builds a Python-RDD-backed plan with
-            # unknown stats — no broadcast, and every execution pays a
-            # Python worker round-trip.
-            pdf = pd.DataFrame(
-                {"node": list(labels_map.keys()), "component": list(labels_map.values())},
-                dtype="int64",
-            )
-            return spark.createDataFrame(pdf)
-        finally:
-            edges.unpersist()
+        labels_map = _union_find_components(small)
+        # pandas → Arrow → LocalTableScan: a true local relation with known
+        # (tiny) stats, so downstream joins broadcast it.  A plain
+        # createDataFrame(list) builds a Python-RDD-backed plan with unknown
+        # stats — no broadcast, and every execution pays a Python worker
+        # round-trip.
+        pdf = pd.DataFrame(
+            {"node": list(labels_map.keys()), "component": list(labels_map.values())},
+            dtype="int64",
+        )
+        return pairs.sparkSession.createDataFrame(pdf)
+    edges = edges.persist()  # feeds every round of the loop below
     labels = materialize(
         edges.select(F.col("_src").alias("_n"))
         .distinct()
@@ -275,8 +282,12 @@ def _shingle_base(df: DataFrame, id_col: str, text_col: str, ngram: int) -> Data
     Docs with fewer than ``ngram`` tokens are dropped, exactly like the
     window form (its lead-null filter removed them).
 
-    The repartition on whole documents is kept: it moves |docs| rows once so
-    tokenization runs on every core even off a single-file scan.
+    Documents are hash-repartitioned by id with no explicit count: the
+    shuffle moves |docs| rows once, tokenization parallelizes even off a
+    single-file scan, and AQE sizes the stage — ``spark.sql.shuffle.partitions``
+    tasks at scale, coalesced to one on a tiny corpus.  A fixed-count
+    ``repartition(n, col)`` is a REPARTITION_BY_NUM shuffle that AQE never
+    coalesces (32 tasks for a 500-doc corpus).
 
     Materialized (checkpoint), not persisted: the shingle table feeds 3-4
     consumers (df-freq, rank, 2 verify joins) and an eager checkpoint both
@@ -291,9 +302,8 @@ def _shingle_plan(df: DataFrame, id_col: str, text_col: str, ngram: int) -> Data
     """The un-materialized shingle-table plan (see ``_shingle_base``) —
     exposed separately so plan-stability tests can golden the subtree that
     the checkpoint otherwise hides behind a leaf."""
-    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        df.repartition(nparts, F.col(id_col))
+        df.repartition(F.col(id_col))
         .select(
             F.col(id_col).alias("_id"),
             F.expr(f"filter(split({text_col}, '\\\\s+'), t -> t <> '')").alias("_t"),
@@ -330,7 +340,7 @@ def ngram_jaccard_pairs(
     aggregate — no O(n²) step at any data size.
     """
     t4 = int(round(threshold * 10000))  # exact integer arithmetic for ⌈t·sz⌉
-    # persisted: the shingle table feeds 4 consumers (df-freq, rank, 2 verify joins)
+    # checkpointed: the shingle table feeds 4 consumers (df-freq, rank, 2 verify joins)
     base = _shingle_base(df, id_col, text_col, ngram)
     ex = base.select("_id", "_sz", F.explode("_sh").alias("_s"))
     dfreq = ex.groupBy("_s").agg(F.count("*").alias("_df"))
@@ -554,11 +564,12 @@ def simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     JVM's two's-complement shiftleft at bit 63).  Token-less docs keep
     signature 0 (empty bit matrix ⇒ all votes ≤ 0).
 
-    Documents are repartitioned by id first: the shuffle moves |docs| rows
-    rather than |tokens| rows and tokenization parallelizes across cores
-    even off a single-file scan."""
-    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    hashed = df.repartition(nparts, F.col(id_col)).select(
+    Documents are hash-repartitioned by id first: the shuffle moves |docs|
+    rows rather than |tokens| rows, tokenization parallelizes even off a
+    single-file scan, and with no explicit count AQE sizes the stage (one
+    ``mapInArrow`` task on a tiny corpus instead of
+    ``spark.sql.shuffle.partitions`` Python tasks)."""
+    hashed = df.repartition(F.col(id_col)).select(
         F.col(id_col).alias("_id"),
         F.expr(
             f"transform(filter(split({text_col}, '\\\\s+'), t -> t <> ''),"

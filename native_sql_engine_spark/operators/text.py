@@ -408,12 +408,12 @@ def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Plan: posexplode to characters → (doc, char) hash-count → per-doc
     -Σ p·log2 p — two map-side-combinable aggregates sharing one doc-key
-    shuffle; no Python, no per-row UDF.  Documents are repartitioned by id
-    before the explode so the shuffle moves |docs| rows, not |chars|.
+    shuffle; no Python, no per-row UDF.  Documents are hash-repartitioned
+    by id before the explode so the shuffle moves |docs| rows, not |chars|;
+    with no explicit count AQE sizes that stage (coalesced on small inputs).
     """
-    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     chars = (
-        df.repartition(nparts, F.col(id_col))
+        df.repartition(F.col(id_col))
         .select(
             F.col(id_col).alias("_id"),
             F.explode(F.split(F.col(text_col), "(?!^)")).alias("_c"),

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Scale probe: execute the three heaviest scale paths far above battery SF.
+"""Scale probe: execute the eight heaviest scale paths far above battery SF.
 
 SCALE.md argues the engine's dedup/graph/ANN paths survive a 100-TB
 cluster because every candidate generator is a bucketed equi-join and no
@@ -324,9 +324,10 @@ def probe_bucketed_write(spark) -> bool:
     for f in files:
         b = os.path.basename(f).split("_")[-1].split(".")[0].split("-")[0]
         per_bucket[b] = per_bucket.get(b, 0) + 1
-    ok = len(files) == k * buckets
+    ok = len(per_bucket) == buckets and all(c == k for c in per_bucket.values())
     print(f"  bucketed_write: {len(files)} files for {buckets} buckets (k={k}) "
-          f"-> {'aligned' if ok else 'MISALIGNED'}", file=sys.stderr)
+          f"-> {'aligned' if ok else f'MISALIGNED {sorted(per_bucket.items())}'}",
+          file=sys.stderr)
     spark.sql("DROP TABLE IF EXISTS scale_probe_bucketed")
     return ok
 
@@ -341,24 +342,36 @@ def probe_core_scaling() -> dict:
     from native_sql_engine_spark.operators.dedup import simhash_table
 
     timings = {}
-    for cores in (32, 8):
-        os.environ["SPARK_GRAFT_CPUS"] = str(cores)
-        s = get_spark(f"scale_probe_cores_{cores}",
-                      **{"spark.driver.memory": f"{DRIVER_MEM_GB}g",
-                         "spark.sql.shuffle.partitions": "64"})
-        # let the previous JVM's executor/GC threads actually wind down —
-        # measured: the first leg right after the main session's stop() ran
-        # 2.4x slow and flipped the ratio assertion on a run that passes in
-        # isolation (shared-VM noise; min-of-3 below bounds the rest)
-        time.sleep(5)
-        docs = gen_documents(s, 400_000)
-        sig = lambda: simhash_table(docs, "doc_id", "text").write.format(
-            "noop").mode("overwrite").save()
-        sig()  # warm (analysis + codegen + python workers)
-        best = min(_timed(sig) for _ in range(3))
-        timings[cores] = round(best, 2)
-        s.stop()
-    os.environ.pop("SPARK_GRAFT_CPUS", None)
+    saved_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    try:
+        for cores in (32, 8):
+            os.environ["SPARK_GRAFT_CPUS"] = str(cores)
+            s = get_spark(f"scale_probe_cores_{cores}",
+                          **{"spark.driver.memory": f"{DRIVER_MEM_GB}g",
+                             "spark.sql.shuffle.partitions": "64"})
+            try:
+                # let the previous JVM's executor/GC threads actually wind
+                # down — measured: the first leg right after the main
+                # session's stop() ran 2.4x slow and flipped the ratio
+                # assertion on a run that passes in isolation (shared-VM
+                # noise; min-of-3 below bounds the rest)
+                time.sleep(5)
+                docs = gen_documents(s, 400_000)
+                sig = lambda: simhash_table(docs, "doc_id", "text").write.format(
+                    "noop").mode("overwrite").save()
+                sig()  # warm (analysis + codegen + python workers)
+                timings[cores] = round(min(_timed(sig) for _ in range(3)), 2)
+            finally:
+                s.stop()
+    except Exception as e:  # recorded as a failed check, not raised
+        error = f"{type(e).__name__}: {e}".splitlines()[0]
+        print(f"  core_scaling: FAILED {error}", file=sys.stderr)
+        return {"rows": 400_000, "timings": timings, "ratio": None, "error": error}
+    finally:
+        if saved_cpus is None:
+            os.environ.pop("SPARK_GRAFT_CPUS", None)
+        else:
+            os.environ["SPARK_GRAFT_CPUS"] = saved_cpus
     ratio = round(timings[8] / timings[32], 2)
     print(f"  core_scaling: 32c {timings[32]}s vs 8c {timings[8]}s -> {ratio}x",
           file=sys.stderr)
@@ -491,7 +504,7 @@ def main() -> int:
     if only in (None, "cores") and not quick:
         # needs fresh sessions with different masters — after the main stop
         core_scaling = probe_core_scaling()
-        checks["cpu_kernel_scales_with_cores"] = core_scaling["ratio"] >= 2.0
+        checks["cpu_kernel_scales_with_cores"] = (core_scaling["ratio"] or 0) >= 2.0
     print(json.dumps({
         "probe": "scale_probe", "driver_mem_cap_gb": DRIVER_MEM_GB,
         "jvm_heap_max_mb": heap_max, "pool_peak_sum_mb": pool_peak_sum,

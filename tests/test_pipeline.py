@@ -340,22 +340,98 @@ def test_compressed_formats_still_stubbed(spark):
         M.sample_frames(mp4).collect()
 
 
-@pytest.mark.parametrize("small_graph_cutoff", [5_000_000, 0])
+_CHAIN = [(i, i + 1) for i in range(100, 111)] + [(500, 501)]
+
+
+@pytest.mark.parametrize(
+    "small_graph_cutoff", [5_000_000, 0, 2 * len(_CHAIN), 2 * len(_CHAIN) - 1]
+)
 def test_connected_components_chain(spark, small_graph_cutoff, monkeypatch):
     """Worst-case diameter: a 12-node chain must collapse to one component
     (exercises multi-round label propagation), plus an isolated pair.
     Parametrized over both execution paths: driver union-find (default at
-    this size) and the distributed path-halving rounds (cutoff forced to 0)."""
+    this size) and the distributed path-halving rounds (cutoff forced to 0),
+    plus the path-choice boundary: union-find runs iff the graph has at
+    most ``SMALL_GRAPH_EDGES`` directed edges (2 per pair).
+
+    On the distributed path every round must really free the superseded
+    labels' blocks: ``release`` finds them by matching the JVM class name
+    ``LogicalRDD``, and a rename would turn it into a silent no-op that
+    brings back the 12M-edge OOM."""
     from native_sql_engine_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", small_graph_cutoff)
-    chain = [(i, i + 1) for i in range(100, 111)] + [(500, 501)]
-    pairs = spark.createDataFrame(chain, ["a_id", "b_id"])
+    freed: list[int] = []
+    real_release = dedup.release
+
+    def spy_release(df):
+        freed.append(real_release(df))
+        return freed[-1]
+
+    monkeypatch.setattr(dedup, "release", spy_release)
+    pairs = spark.createDataFrame(_CHAIN, ["a_id", "b_id"])
     got = {
         (r.node, r.component) for r in dedup.connected_components(pairs).collect()
     }
     want = {(n, 100) for n in range(100, 112)} | {(500, 500), (501, 500)}
     assert got == want
+    if small_graph_cutoff >= 2 * len(_CHAIN):
+        assert freed == []
+    else:
+        assert len(freed) >= 2 and all(n >= 1 for n in freed), freed
+
+
+def test_dedup_preshuffles_coalesce(spark, sf_small, monkeypatch):
+    """The shingle, SimHash and char-entropy builds hash-repartition
+    documents by id with no explicit count, so AQE may coalesce the stage:
+    on a small corpus each runs fewer tasks than
+    ``spark.sql.shuffle.partitions``.  A fixed ``repartition(n, col)`` is
+    never coalesced; the references below are built that way (the same
+    operator code with ``repartition`` forced to the fixed count) and must
+    give identical rows."""
+    from native_sql_engine_spark.catalog import load_table
+    from native_sql_engine_spark.materialize import release
+    from native_sql_engine_spark.operators import dedup
+    from native_sql_engine_spark.operators.text import char_entropy
+
+    docs = load_table(spark, sf_small, "documents")
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def builds():
+        return {
+            "shingles": dedup._shingle_base(docs, "doc_id", "text", 3),
+            "simhash": dedup.simhash_table(docs, "doc_id", "text"),
+            "entropy": char_entropy(docs, "doc_id", "text"),
+        }
+
+    def partitions(df) -> int:
+        return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+    def rows(name, df) -> set:
+        if name == "shingles":
+            return {(r._id, tuple(sorted(r._sh)), r._sz) for r in df.collect()}
+        return {tuple(r) for r in df.collect()}
+
+    got = builds()
+    shuffled = {name: partitions(df) for name, df in got.items()}
+    assert all(n < nparts for n in shuffled.values()), (nparts, shuffled)
+
+    fixed = type(docs).repartition
+
+    def fixed_count(self, *cols):
+        if cols and not isinstance(cols[0], int):
+            cols = (nparts, *cols)
+        return fixed(self, *cols)
+
+    with monkeypatch.context() as m:
+        m.setattr(type(docs), "repartition", fixed_count)
+        ref = builds()
+        assert all(partitions(df) == nparts for df in ref.values())
+    for name in got:
+        assert rows(name, got[name]) == rows(name, ref[name]), name
+    assert rows("entropy", got["entropy"]), "fixture should have documents"
+    release(got["shingles"])
+    release(ref["shingles"])
 
 
 def test_dedup_clusters_canonicals_cover_corpus(spark, sf_small):
